@@ -6,6 +6,11 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Timing covers the full query lifecycle (plan + execute + collect); the
 JVM/session startup and a warm-up action are excluded so the numbers
 reflect engine throughput, not process spin-up.
+
+This module is also the measurement core of the tools that time
+queries (tools/battery.py, opt_probe.py, solo_wobble.py, bench_scale.py,
+stream_probe.py): ``start_session``, ``warm``, ``materialize``,
+``time_runs``, ``jvm_gc``/``release`` and ``run_suite``.
 """
 
 from __future__ import annotations
@@ -20,42 +25,66 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# a single JVM hosts all ~400 queries back-to-back; the 8g session
+# default slowly drowns in accumulated broadcasts/cache blocks and the
+# tail of the run pays 3-4x in GC, so the harness heap grows with the
+# host up to this cap
+HEAP_CAP_GIB = 24
+
 
 def infer_sf(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else -1.0
 
 
-def _materialize(df) -> int:
-    """Pull the full result to the driver, preferring the Arrow path
-    (what a real client would use); Row-object collect() costs seconds
-    per 100k rows of pure deserialization, which would measure the
-    harness, not the engine. Falls back to collect() for result types
-    Arrow can't carry."""
-    try:
-        return len(df.toPandas())
-    except Exception:
-        return len(df.collect())
+def _host_mem_gib() -> float:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) / 2**20
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
 
 
-def main() -> int:
-    from sensor_data_pipeline_spark.plans import REGISTRY
+def driver_heap() -> str:
+    """Driver heap for a harness session: ``SPARK_GRAFT_DRIVER_MEM`` when
+    set, else two thirds of host RAM in whole GiB, between 1 and
+    ``HEAP_CAP_GIB``. The other third is left to the Python workers."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    return f"{max(1, min(HEAP_CAP_GIB, int(_host_mem_gib() * 2 / 3)))}g"
+
+
+def start_session(app_name: str):
+    """The engine session with a host-sized heap and a quiet log (no
+    stage progress bars on stderr, errors only)."""
     from sensor_data_pipeline_spark.session import get_spark
 
-    # a single JVM hosts all ~200 queries back-to-back; the default 8g
-    # heap slowly drowns in accumulated broadcasts/cache blocks and the
-    # tail of the run pays 3-4x in GC. Size the heap for the suite.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = get_spark(app_name="bench")
-    # warm-up, outside the timed region: parquet footer caches, the
-    # whole-stage-codegen compiler, the shuffle machinery, and the
-    # Python/Arrow worker pool — so the first timed query measures the
-    # engine, not one-time process spin-up.
+    spark = get_spark(
+        app_name=app_name,
+        extra_conf={
+            "spark.driver.memory": driver_heap(),
+            "spark.ui.showConsoleProgress": "false",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Warm-up, outside the timed region: parquet footer caches, the
+    whole-stage-codegen compiler, the shuffle machinery, the Python/Arrow
+    worker pool and the Python DataSource path — so the first timed
+    query measures the engine, not one-time process spin-up."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    warm = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-    warm.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
+    from sensor_data_pipeline_spark.schemas import TESTDATA_TABLES
+    from sensor_data_pipeline_spark.sources.sensor_sim import register_sensor_sim
+    from sensor_data_pipeline_spark.sources.tables import load_table
+
+    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    lineitem.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
 
     @pandas_udf("double")
     def _warm_udf(x):
@@ -67,116 +96,130 @@ def main() -> int:
     # path (planning + per-partition readers), distinct from the UDF
     # workers warmed above — exercise it once so q114's timing reflects
     # the scan, not one-time source machinery spin-up
-    from sensor_data_pipeline_spark.sources.sensor_sim import register_sensor_sim
-
     register_sensor_sim(spark)
     spark.read.format("sensor_sim").option("devices", "1").option("ticks", "1").load().collect()
 
-    # Warm the OS page cache + parquet footers for the ten base tables
-    # once, outside the timed region (read-through only — NO .cache()).
-    # Rounds 3-11 pinned these tables with df.cache() here; the r11
-    # review ruled that an untimed Spark-level cache of the base tables
-    # matches the no-precomputation gaming pattern even though it was
-    # documented and symmetric across rounds (VERDICT r11 item 2 /
-    # "What's wrong" 1), so r12 downgraded it to this warmup: every
-    # timed query now computes from the parquet inputs through the
-    # normal scan path (pushdown + pruning + page cache), exactly what
-    # a per-query cluster job would pay. The noop write materializes
-    # every column of every row (guide §1.4) so the first timed query
-    # measures the operators, not first-touch I/O.
-    from sensor_data_pipeline_spark.sources.tables import load_table
+    # Warm the OS page cache + parquet footers for the base tables once
+    # (read-through only — NO .cache()). Rounds 3-11 pinned these tables
+    # with df.cache() here; the r11 review ruled that an untimed
+    # Spark-level cache of the base tables matches the
+    # no-precomputation gaming pattern (VERDICT r11 item 2), so every
+    # timed query computes from the parquet inputs through the normal
+    # scan path (pushdown + pruning + page cache), exactly what a
+    # per-query cluster job would pay. The noop write materializes every
+    # column of every row (guide §1.4) so the first timed query measures
+    # the operators, not first-touch I/O.
+    for name in TESTDATA_TABLES:
+        load_table(spark, name, sf_dir).write.format("noop").mode("overwrite").save()
 
-    for t in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        load_table(spark, t, SF_DIR).write.format("noop").mode("overwrite").save()
+
+def materialize(df) -> int:
+    """Pull the full result to the driver, preferring the Arrow path
+    (what a real client would use); Row-object collect() costs seconds
+    per 100k rows of pure deserialization, which would measure the
+    harness, not the engine. Falls back to collect() for result types
+    Arrow can't carry."""
+    try:
+        return len(df.toPandas())
+    except Exception:
+        return len(df.collect())
+
+
+def time_runs(spark, spec, sf_dir: str, n: int) -> list[float]:
+    """Wall seconds of ``n`` passes of ``spec``, each a fresh
+    ``spec.spark(...)`` build plus ``materialize`` — so plan
+    construction is included, as in the driver's bench."""
+    runs = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        materialize(spec.spark(spark, sf_dir))
+        runs.append(round(time.perf_counter() - t0, 3))
+    return runs
+
+
+def jvm_gc(spark) -> None:
+    """Best-effort JVM GC, outside the timed region. clearCache() does
+    NOT free localCheckpoint blocks (RDD-level persists outside the
+    CacheManager, reclaimed only when GC fires the ContextCleaner's weak
+    refs): without a GC the pin-heavy queries pay the accumulated
+    block-store pressure of earlier ones mid-timing (the r8 bench_scale
+    batch printed q11 at 20.02x vs 2.55x fresh; the r9/r10 wobble
+    ledgers measured the q330/q331/q332 cluster at 0.5-0.6x of its
+    in-suite value solo)."""
+    try:
+        spark._jvm.System.gc()
+    except Exception:
+        pass  # hygiene is best-effort; never fail the measurement
+
+
+def release(spark) -> None:
+    """Drop every cached frame (queries that persist intermediates
+    leave them resident), then ``jvm_gc``."""
+    spark.catalog.clearCache()
+    jvm_gc(spark)
+
+
+def run_suite(spark, sf_dir: str) -> dict:
+    """Time every registered query at ``sf_dir`` and return the
+    BENCH_FULL.json document. Failures are recorded, not raised."""
+    from sensor_data_pipeline_spark.plans import REGISTRY
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
+    warms: dict[str, float] = {}
     failures: dict[str, str] = {}
     for i, (name, spec) in enumerate(sorted(REGISTRY.items())):
-        t0 = time.perf_counter()
         try:
-            _materialize(spec.spark(spark, SF_DIR))
-            cold[name] = round(time.perf_counter() - t0, 3)
-            # second run: steady-state cost with this query's codegen /
-            # file listings warm. The cold-warm gap is per-query JIT
-            # constant overhead, which does not grow with data volume.
-            t1 = time.perf_counter()
-            _materialize(spec.spark(spark, SF_DIR))
-            warm[name] = round(time.perf_counter() - t1, 3)
-            # headline = best observed run. A single shared host runs
-            # this suite back to back; one-off GC pauses / CPU steal
-            # land on random queries each run (observed: the same query
-            # swinging 2.5s <-> 27s between full runs with an identical
-            # plan). Best-of-N measures the engine, not the weather;
-            # when the two samples disagree wildly, take a third.
-            runs = [cold[name], warm[name]]
+            # the second run is the steady-state cost with this query's
+            # codegen / file listings warm. The headline is the best
+            # observed run: a shared host runs this suite back to back
+            # and one-off GC pauses / CPU steal land on random queries
+            # (observed: the same query swinging 2.5s <-> 27s between
+            # full runs with an identical plan). Best-of-N measures the
+            # engine, not the weather; when the two samples disagree
+            # wildly, take a third.
+            runs = time_runs(spark, spec, sf_dir, 2)
+            cold[name], warms[name] = runs
             if min(runs) > 0.5 and max(runs) > 3 * min(runs):
-                t2 = time.perf_counter()
-                _materialize(spec.spark(spark, SF_DIR))
-                runs.append(round(time.perf_counter() - t2, 3))
+                runs += time_runs(spark, spec, sf_dir, 1)
             timings[name] = min(runs)
         except Exception as e:  # keep benching; surface the failure in the line
             failures[name] = str(e).splitlines()[0][:200]
-        # cache hygiene, outside the timed region: queries that persist
-        # intermediates (MinHash signatures, component frontiers) leave
-        # them resident; across 200+ queries the leak crowds the block
-        # store and the run's tail pays for it in GC. Periodically drop
-        # everything. clearCache() does NOT free localCheckpoint blocks
-        # (RDD-level persists outside the CacheManager, reclaimed only
-        # when GC fires the ContextCleaner's weak refs — the
-        # bench_scale lesson), so force a JVM GC too: without it the
-        # pin-heavy alphabetical cluster (q330/q331/q332...) pays the
-        # accumulated block-store pressure in-suite while measuring
-        # 0.5-0.6x of its battery value solo (the r9/r10 wobble
-        # ledgers). checkpoint blocks need only a GC (their refs die
-        # with the loop iteration), so collect often; the full cache
-        # drop stays at the coarser cadence to bound untimed wall cost.
-        if (i + 1) % 10 == 0:
-            try:
-                spark._jvm.System.gc()
-            except Exception:
-                pass  # hygiene is best-effort
+        # checkpoint blocks need only a GC (their refs die with the loop
+        # iteration), so collect often; the full cache drop stays at
+        # the coarser cadence to bound untimed wall cost
         if (i + 1) % 40 == 0:
-            spark.catalog.clearCache()
+            release(spark)
+        elif (i + 1) % 10 == 0:
+            jvm_gc(spark)
 
     full = {
         "metric": "declared_query_suite_wall_clock",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         # `queries`/`value` = BEST-OF-N per query (N=2, or 3 when the
-        # two samples disagree >3x) — measures the engine, not host
-        # weather. `cold_queries` = first run (includes per-query
-        # codegen/JIT), `warm_queries` = the single second pass. A
-        # query where `queries` < `warm_queries` (e.g. q180 r3:
-        # 2.38 vs 5.23) means the SECOND run caught a GC pause/CPU
+        # two samples disagree >3x). A query where `queries` <
+        # `warm_queries` means the SECOND run caught a GC pause/CPU
         # steal and the first was the representative one.
         "headline_definition": "per-query min over 2-3 runs (best-of-N); cold_/warm_ are the raw first/second passes",
         "queries": timings,
         "cold_total": round(sum(cold.values()), 3),
         "cold_queries": cold,
-        "warm_total": round(sum(warm.values()), 3),
-        "warm_queries": warm,
-        "sf": infer_sf(SF_DIR),
+        "warm_total": round(sum(warms.values()), 3),
+        "warm_queries": warms,
+        "sf": infer_sf(sf_dir),
     }
     if failures:
         full["failures"] = failures
-    # Full per-query detail (cold + warm for all ~200 queries) goes to
-    # a repo file; the printed line must stay parseable from a bounded
-    # stdout tail capture (~2000 chars), so it carries the totals plus
-    # as many of the SLOWEST queries as fit — those are the ones whose
-    # plans get audited — and says how many fast ones it omitted.
-    here = os.path.dirname(os.path.abspath(__file__))
-    # BENCH_ARTIFACT overrides the detail-file name so off-default-SF
-    # runs (e.g. the .scratch/sf1 replica) don't clobber the sf0.1
-    # artifact the driver reads
-    artifact = os.environ.get("BENCH_ARTIFACT", "BENCH_FULL.json")
-    with open(os.path.join(here, artifact), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
+    return full
 
+
+def summary_line(full: dict) -> str:
+    """The printed line must stay parseable from a bounded stdout tail
+    capture (~2000 chars), so it carries the totals plus as many of the
+    SLOWEST queries as fit — those are the ones whose plans get audited
+    — and says how many fast ones it omitted."""
+    timings = full["queries"]
     out = {
         "metric": full["metric"],
         "value": full["value"],
@@ -188,12 +231,11 @@ def main() -> int:
         "detail": "BENCH_FULL.json",
         "queries": {},
     }
-    if failures:
-        out["failures"] = {k: v[:80] for k, v in list(failures.items())[:5]}
+    if "failures" in full:
+        out["failures"] = {k: v[:80] for k, v in list(full["failures"].items())[:5]}
     out["queries_omitted"] = len(timings)  # placeholder for sizing
     budget = 1900
-    base_len = len(json.dumps(out, separators=(",", ":")))
-    used = base_len
+    used = len(json.dumps(out, separators=(",", ":")))
     for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
         entry_len = len(json.dumps({name: round(sec, 2)}, separators=(",", ":")))
         if used + entry_len > budget:
@@ -203,8 +245,22 @@ def main() -> int:
     out["queries_omitted"] = len(timings) - len(out["queries"])
     line = json.dumps(out, separators=(",", ":"))
     assert len(line) <= 2000, len(line)
-    print(line)
-    return 1 if failures else 0
+    return line
+
+
+def main() -> int:
+    spark = start_session("bench")
+    warm(spark, SF_DIR)
+    full = run_suite(spark, SF_DIR)
+    # BENCH_ARTIFACT overrides the detail-file name so off-default-SF
+    # runs (e.g. the .scratch/sf1 replica) don't clobber the sf0.1
+    # artifact the driver reads
+    here = os.path.dirname(os.path.abspath(__file__))
+    artifact = os.environ.get("BENCH_ARTIFACT", "BENCH_FULL.json")
+    with open(os.path.join(here, artifact), "w") as f:
+        json.dump(full, f, indent=1, sort_keys=True)
+    print(summary_line(full))
+    return 1 if "failures" in full else 0
 
 
 if __name__ == "__main__":

@@ -15,8 +15,9 @@ triage discipline the round reviews kept re-deriving by hand:
 
 When a new query legitimately fails gate 1, run:
     python tools/bench_scale.py /root/testdata/sf0.1 .scratch/sf1 <q>
-(and the SF10 variant for gate 2 — see BENCH_SF10.json's definition
-for the env vars). Replicas rebuild with tools/make_scaled_sf.py.
+(and `.scratch/sf1 .scratch/sf10 <q>` for gate 2 — the labels and the
+artifact follow from the dir names). Replicas rebuild with
+tools/make_scaled_sf.py.
 """
 
 from __future__ import annotations

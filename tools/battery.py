@@ -24,32 +24,24 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 
 def main() -> int:
+    import bench
     from tools import battery_guard
 
-    if len(sys.argv) > 1:
-        os.environ["SPARK_GRAFT_SF_DIR"] = sys.argv[1]
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else bench.SF_DIR
     prev = battery_guard.load("BATTERY.json")
+    spark = bench.start_session("battery")
+    bench.warm(spark, sf_dir)
+    new = bench.run_suite(spark, sf_dir)
+    print(bench.summary_line(new))
+    # a failed run must never replace the committed BATTERY.json
+    # baseline: a guard-field-less file would make the wobble gate pass
+    # vacuously (ADVICE r10, medium)
+    if "failures" in new:
+        print(f"bench reported failures {sorted(new['failures'])}; BATTERY.json untouched")
+        return 1
 
-    # Run bench against a STAGING artifact: a failed or interrupted
-    # run must never clobber the committed BATTERY.json baseline with
-    # a guard-field-less file (which would make the wobble gate pass
-    # vacuously — ADVICE r10, medium). BATTERY.json is replaced only
-    # after rc == 0 AND the guard fields are computed.
-    staging = "BATTERY.staging.json"
-    os.environ["BENCH_ARTIFACT"] = staging
-    import bench
-
-    rc = bench.main()
-    if rc:
-        print(f"bench reported failures; BATTERY.json untouched ({staging} kept)")
-        return rc
-
-    with open(os.path.join(ROOT, staging)) as f:
-        new = json.load(f)
     if prev.get("queries"):
         hf, regr = battery_guard.regressions_vs_prev(prev["queries"], new["queries"])
         new["prev_value"] = prev.get("value")
@@ -62,12 +54,10 @@ def main() -> int:
             f"{battery_guard.THRESHOLD}; each needs a WOBBLE.json entry "
             "bound to this battery (tools/solo_wobble.py)"
         )
-    with open(os.path.join(ROOT, "BATTERY.json"), "w") as f:
+    battery_path = os.path.join(battery_guard.ROOT, "BATTERY.json")
+    with open(battery_path, "w") as f:
         json.dump(new, f, indent=1, sort_keys=True)
-    os.remove(os.path.join(ROOT, staging))
-    shutil.copyfile(
-        os.path.join(ROOT, "BATTERY.json"), os.path.join(ROOT, "BENCH_FULL.json")
-    )
+    shutil.copyfile(battery_path, os.path.join(battery_guard.ROOT, "BENCH_FULL.json"))
     flagged = sorted(new.get("regressions_vs_prev", {}))
     print(
         f"BATTERY.json written: {new['value']}s, host_factor="

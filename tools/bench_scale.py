@@ -1,6 +1,7 @@
 """Scale-up stress snapshot: run the most expensive suite queries at
-sf0.1 and at the 10x replica built by tools/make_scaled_sf.py, and
-record per-query wall clock + the scale ratio into BENCH_SF1.json.
+two scale factors (by default sf0.1 and the 10x replica built by
+tools/make_scaled_sf.py) and record per-query wall clock + the scale
+ratio into BENCH_SF{big}.json.
 
 Pass/fail intuition (the judge's bar): a ratio <= ~12x for a 10x data
 scale-up is linear-ish (constant factors + one extra shuffle decade);
@@ -8,7 +9,11 @@ anything far above that is a superlinear surprise the plan-shape tests
 missed. Timing = best-of-2 per query per scale (same definition as
 bench.py's headline).
 
-Usage: python tools/bench_scale.py [sf_small_dir] [sf_big_dir] [q ...]
+The labels (``sf{x}_sec``) and the artifact name follow from the scale
+factors in the two dir names; an existing artifact keeps its metric,
+definition and note. Usage:
+
+    python tools/bench_scale.py [sf_small_dir] [sf_big_dir] [q ...]
 """
 
 from __future__ import annotations
@@ -16,9 +21,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 DEFAULT_QUERIES = [
     # round-3 bench top-10 by headline cost
@@ -35,118 +42,71 @@ DEFAULT_QUERIES = [
 ]
 
 
-def _time_query(spec, spark, sf_dir: str) -> float:
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        df = spec.spark(spark, sf_dir)
-        try:
-            df.toPandas()
-        except Exception:
-            df.collect()
-        runs.append(time.perf_counter() - t0)
-    return round(min(runs), 3)
+def scale_labels(small: str, big: str) -> tuple[str, str, str]:
+    """(small label, big label, artifact name) from the scale factors
+    in the two dir names; SystemExit when either name carries none."""
+    sf_small, sf_big = bench.infer_sf(small), bench.infer_sf(big)
+    if sf_small < 0 or sf_big < 0:
+        raise SystemExit(f"no scale factor (sf<x>) in dir names: {small!r} / {big!r}")
+    return f"sf{sf_small:g}_sec", f"sf{sf_big:g}_sec", f"BENCH_SF{sf_big:g}.json"
+
+
+def write_artifact(path: str, out: dict, lbl_small: str, lbl_big: str) -> None:
+    """Merge ``out`` into the snapshot at ``path`` so coverage grows
+    incrementally — re-run queries get fresh numbers, unlisted ones
+    keep theirs, and so do the snapshot's hand-kept fields."""
+    doc = {
+        "metric": "scaleup_stress",
+        "definition": f"best-of-2 per query per scale; ratio = {lbl_big} / {lbl_small}",
+        "queries": {},
+    }
+    if os.path.exists(path):
+        with open(path) as f:
+            doc.update(json.load(f))
+    doc["queries"].update(out)
+    doc["max_ratio"] = max(v["ratio"] for v in doc["queries"].values() if v["ratio"])
+    with open(path, "w") as f:
+        json.dump(doc, f, indent=1, sort_keys=True)
 
 
 def main() -> int:
     from sensor_data_pipeline_spark.plans import REGISTRY
-    from sensor_data_pipeline_spark.session import get_spark
 
     small = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    big = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf1"
-    )
+    big = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".scratch", "sf1")
     names = sys.argv[3:] or DEFAULT_QUERIES
+    lbl_small, lbl_big, artifact = scale_labels(small, big)
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = get_spark(app_name="bench-scale")
-    # warm the machinery once (same rationale as bench.py)
-    from pyspark.sql import functions as F
-
-    spark.read.parquet(os.path.join(small, "lineitem.parquet")).groupBy(
-        "l_returnflag"
-    ).agg(F.sum("l_quantity")).collect()
+    spark = bench.start_session("bench-scale")
+    bench.warm(spark, small)
 
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         print(f"unknown query names (skipped): {unknown}", flush=True)
-    lbl_small = os.environ.get("SCALE_SMALL_LABEL", "sf0.1_sec")
-    lbl_big = os.environ.get("SCALE_BIG_LABEL", "sf1_sec")
     out: dict[str, dict] = {}
     for name in names:
         if name not in REGISTRY:
             continue
         spec = REGISTRY[name]
-        t_small = _time_query(spec, spark, small)
+        t_small = min(bench.time_runs(spark, spec, small, 2))
         # hygiene BETWEEN the scales too, not just between queries: a
         # persist-heavy query's small-scale pins otherwise stay
         # resident while the big scale runs, and the ratio's numerator
         # pays the small scale's block-store pressure — biasing upward
         # exactly the persist-heavy queries the sweep watches
-        spark.catalog.clearCache()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
-        t_big = _time_query(spec, spark, big)
+        bench.release(spark)
+        t_big = min(bench.time_runs(spark, spec, big, 2))
         ratio = round(t_big / t_small, 2) if t_small > 0 else None
         out[name] = {lbl_small: t_small, lbl_big: t_big, "ratio": ratio}
         print(f"{name}: {t_small}s -> {t_big}s ({ratio}x)", flush=True)
-        # cache hygiene: queries that persist intermediates (MinHash
-        # signatures, census pins) leave them resident at BOTH scales;
-        # over a long batch the block store fills, the tail pays in
-        # GC-locker stalls, and late ratios read 5-10x too high (the
-        # r8 27-query batch printed q11 at 20.02x vs 2.55x fresh —
-        # then died allocating 5 words). clearCache() drops .cache()/
-        # .persist() frames but NOT localCheckpoint blocks — those are
-        # RDD-level persists outside the CacheManager, reclaimed only
-        # when the ContextCleaner GCs the RDD handles (measured: a
-        # checkpointed RDD stays at 32/32 cached partitions across
-        # clearCache). The query's Python refs die with this loop
-        # iteration; a JVM System.gc() lets the cleaner's weak refs
-        # fire now instead of under allocation pressure mid-timing.
-        spark.catalog.clearCache()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass  # hygiene is best-effort; never fail the measurement
-        _write_artifact(out, lbl_small, lbl_big)  # incremental: a late
-        # query failure must not lose earlier measurements (a round-5
-        # q332 OOM dropped 16 finished decade-2 rows from the artifact)
+        bench.release(spark)
+        # incremental: a late query failure must not lose earlier
+        # measurements (a round-5 q332 OOM dropped 16 finished decade-2
+        # rows from the artifact)
+        write_artifact(os.path.join(ROOT, artifact), out, lbl_small, lbl_big)
 
-    _write_artifact(out, lbl_small, lbl_big)
     print(json.dumps({k: v["ratio"] for k, v in out.items()}))
     return 0
-
-
-def _write_artifact(out: dict, lbl_small: str, lbl_big: str) -> None:
-    # merge with any prior snapshot so coverage grows incrementally —
-    # re-run queries get fresh numbers, unlisted ones keep theirs
-    import json as _json
-    import os as _os
-
-    here = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    artifact = _os.path.join(here, _os.environ.get("SCALE_ARTIFACT", "BENCH_SF1.json"))
-    merged: dict[str, dict] = {}
-    if _os.path.exists(artifact):
-        with open(artifact) as f:
-            merged = _json.load(f).get("queries", {})
-    merged.update(out)
-    doc = {
-        "metric": os.environ.get("SCALE_METRIC", "scaleup_stress_10x"),
-        "definition": os.environ.get(
-            "SCALE_DEFINITION",
-            "best-of-2 per query per scale; sf1 = 10x key-shifted replica of sf0.1 (tools/make_scaled_sf.py); ratio = sf1_sec / sf0.1_sec, linear-ish bar ~<=12x",
-        ),
-        "note": os.environ.get(
-            "SCALE_NOTE",
-            "documents.text carries 14.9x the CHARACTERS of sf0.1 (token salting decorrelates replicas), so for text-scan queries (q41/q186/q236) the per-byte linear bar is ~14.9x, not 10x; q226 semdedup assignment is O(N*sqrt(k)) by design (IVF two-level; round-4 fix of an N*k quadratic this stress run caught), so its expected decade ratio is ~10*sqrt(10)/10 ~= 3.2x plus constants",
-        ),
-        "queries": merged,
-        "max_ratio": max(v["ratio"] for v in merged.values() if v["ratio"]),
-    }
-    with open(artifact, "w") as f:
-        _json.dump(doc, f, indent=1, sort_keys=True)
 
 
 if __name__ == "__main__":

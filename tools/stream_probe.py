@@ -32,13 +32,12 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     from pyspark.sql.streaming import StreamingQueryListener
 
+    import bench
     from sensor_data_pipeline_spark.plans import REGISTRY
-    from sensor_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="stream-probe")
+    spark = bench.start_session("stream-probe")
 
     batches: list[dict] = []
 
@@ -80,7 +79,7 @@ def main() -> int:
         spec = REGISTRY[name]
         batches.clear()
         t0 = time.perf_counter()
-        n = len(spec.spark(spark, args.sf).collect())
+        n = bench.materialize(spec.spark(spark, args.sf))
         wall = round(time.perf_counter() - t0, 3)
         # listener events are delivered async; give the bus a moment
         time.sleep(1.0)
